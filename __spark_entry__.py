@@ -104,6 +104,15 @@ def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _spread(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` over the default parallelism when its scan has
+    fewer splits: a single-file fixture would otherwise run a per-row
+    map side (tokenize, explode, minhash, digest) on one task. A source
+    with enough splits is returned as-is — no exchange added."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df if df.rdd.getNumPartitions() >= n else df.repartition(n)
+
+
 # ---------------------------------------------------------------------------
 # queries — events stream (operator inventory SURVEY.md §2)
 # ---------------------------------------------------------------------------
@@ -614,11 +623,7 @@ def q_dedup_jaccard(spark, sf_dir):
     the unbounded-scale path."""
     from proxyfeatureextraction_spark.operators.dedup import jaccard_pairs
 
-    # single-split fixture repartitioned before the tokenize/sort map
-    # side (same fix as q_gopher_repetition / q_dsir_weights)
-    d = _table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_table(spark, sf_dir, "documents"))
     return jaccard_pairs(d, threshold=0.8)
 
 
@@ -629,10 +634,7 @@ def q_dedup_jaccard_scalable(spark, sf_dir):
     size; precision exact, recall = LSH recall (bands=8 here)."""
     from proxyfeatureextraction_spark.operators.dedup import jaccard_pairs_scalable
 
-    # single-split fixture repartitioned before the minhash map side
-    d = _table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_table(spark, sf_dir, "documents"))
     return jaccard_pairs_scalable(d, threshold=0.8, n_perm=16, bands=8)
 
 
@@ -643,10 +645,7 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
     permuted texts (identical word sets) do NOT pair here."""
     from proxyfeatureextraction_spark.operators.dedup import jaccard_pairs_scalable
 
-    # single-split fixture repartitioned before the shingle+minhash map side
-    d = _table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_table(spark, sf_dir, "documents"))
     return jaccard_pairs_scalable(d, threshold=0.8, n_perm=16, bands=8, shingle=3)
 
 
@@ -1268,8 +1267,9 @@ def q_embedding_dup_clusters(spark, sf_dir):
     nodes = _table(spark, sf_dir, "embeddings").select("vec_id")
     return dedup_clusters(
         pairs, nodes=nodes, a_col="vec_id", b_col="neighbor", id_col="vec_id",
-        # top-k lists hold distinct neighbors and the a<b filter keeps
-        # each undirected pair from one list only — unique by construction
+        # the self-join over unique vec_ids yields each ordered pair once
+        # and the single-orientation vec_id < neighbor filter keeps one
+        # per undirected pair — unique by construction
         pairs_distinct=True,
     )
 
@@ -1384,14 +1384,11 @@ def q_nb_quality(spark, sf_dir):
 def q_dedup_substrings(spark, sf_dir):
     """Exact-substring dedup (Lee et al. 2021, operators/dedup.py):
     corpus-wide duplicated >= k-token regions cut out of every doc.
-    The fixture is a single parquet split, so the wrapper repartitions
-    before the explode-heavy gram side (the shape a multi-split
-    production input has for free)."""
+    ``_spread`` fans the single-split fixture out before the
+    explode-heavy gram side."""
     from proxyfeatureextraction_spark.operators.dedup import dedup_substrings
 
-    d = _table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_table(spark, sf_dir, "documents"))
     return dedup_substrings(d, k=8)
 
 
@@ -1406,11 +1403,7 @@ def q_lm_perplexity(spark, sf_dir):
         ngram_lm_counts,
     )
 
-    # single-split fixture repartitioned before the bigram-explode map
-    # side (same fix as q_gopher_repetition / q_dsir_weights)
-    d = _table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_table(spark, sf_dir, "documents"))
     lm = ngram_lm_counts(d.filter(F.col("doc_id") % 10 == 0))
     return lm_cross_entropy(d, lm).select(
         "doc_id",
@@ -1432,11 +1425,7 @@ def q_ppl_buckets(spark, sf_dir):
         ppl_buckets,
     )
 
-    # single-split fixture repartitioned before the bigram-explode map
-    # side (same fix as q_gopher_repetition / q_dsir_weights)
-    d = _table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_table(spark, sf_dir, "documents"))
     lm = ngram_lm_counts(d.filter(F.col("doc_id") % 10 == 0))
     return ppl_buckets(d, lm, group_col="lang")
 
@@ -1500,15 +1489,12 @@ def q_tfidf_allpairs(spark, sf_dir):
     weighted-cosine complement to the minhash set-similarity gates.
     Prefix filtering is lossless, so the oracle is the brute-force
     term self-join; the nearest pair to the 0.8 boundary sits 2.3e-6
-    away (measured) — far above cross-engine float noise.  The fixture
-    is a single parquet split, so the wrapper repartitions before the
-    explode-heavy index build — the shape a multi-split production
-    input has for free."""
+    away (measured) — far above cross-engine float noise.  ``_spread``
+    fans the single-split fixture out before the explode-heavy index
+    build."""
     from proxyfeatureextraction_spark.functions.retrieval import tfidf_allpairs
 
-    d = _table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_table(spark, sf_dir, "documents"))
     out = tfidf_allpairs(d, threshold=0.8)
     return out.select("a", "b", _R6(F.col("sim"), "sim"))
 
@@ -1543,11 +1529,7 @@ def q_contamination_report(spark, sf_dir):
         contamination_report,
     )
 
-    # single-split fixture repartitioned before the explode-heavy
-    # 8-gram map side (same fix as q_gopher_repetition / q_dsir_weights)
-    d = _table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_table(spark, sf_dir, "documents"))
     return contamination_report(
         d.filter(F.col("doc_id") % 20 != 0),
         d.filter(F.col("doc_id") % 20 == 0),
@@ -1573,14 +1555,12 @@ def q_bloom_decontaminate(spark, sf_dir):
     probe it via broadcast join. Flags are a deterministic SUPERSET of
     the exact decontaminate gate (Bloom false positives, never
     negatives); the oracle replays the exact same polynomial-hash bit
-    arithmetic in DuckDB. Single-split fixture repartitioned before the
-    explode-heavy gram-hash map side (same fix as q_gopher_repetition /
-    q_dsir_weights; measured 10.7 -> 2.2 s warm at sf0.1)."""
+    arithmetic in DuckDB. ``_spread`` fans the single-split fixture out
+    before the explode-heavy gram-hash map side (measured 10.7 -> 2.2 s
+    warm at sf0.1)."""
     from proxyfeatureextraction_spark.functions.bloom import bloom_decontaminate
 
-    d = _table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_table(spark, sf_dir, "documents"))
     return bloom_decontaminate(
         d.filter(F.col("doc_id") % 20 != 0),
         d.filter(F.col("doc_id") % 20 == 0),
@@ -1773,10 +1753,7 @@ def q_dedup_near_survivors(spark, sf_dir):
     closure over the same pair list, min reachable id per doc."""
     from proxyfeatureextraction_spark.operators.dedup import dedup_clusters, jaccard_pairs
 
-    # single-split fixture repartitioned before the tokenize/sort map side
-    d = _table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_table(spark, sf_dir, "documents"))
     # jaccard_pairs emits each undirected pair exactly once
     return dedup_clusters(
         jaccard_pairs(d, threshold=0.8), nodes=d, pairs_distinct=True
@@ -1791,11 +1768,7 @@ def q_dedup_corpus(spark, sf_dir):
     recursive closure."""
     from proxyfeatureextraction_spark.operators.dedup import dedup_corpus
 
-    # single-split fixture repartitioned before the normalize+digest
-    # map side (same fix as q_gopher_repetition / q_dsir_weights)
-    d = _table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_table(spark, sf_dir, "documents"))
     return dedup_corpus(d, threshold=0.8)
 
 
@@ -1806,11 +1779,7 @@ def q_dedup_incremental(spark, sf_dir):
     recall) so the DuckDB closure mirrors bit-for-bit."""
     from proxyfeatureextraction_spark.operators.dedup import dedup_incremental
 
-    # single-split fixture repartitioned before the normalize+digest
-    # map side (same fix as q_gopher_repetition / q_dsir_weights)
-    d = _table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_table(spark, sf_dir, "documents"))
     return dedup_incremental(
         d.filter(F.col("doc_id") % 2 == 1),
         d.filter(F.col("doc_id") % 2 == 0),
@@ -1863,11 +1832,7 @@ def q_split_by_cluster(spark, sf_dir):
     id (full value oracle incl. the split label)."""
     from proxyfeatureextraction_spark.operators.curation import split_by_cluster
 
-    # single-split fixture repartitioned before the normalize+digest
-    # map side (same fix as q_gopher_repetition / q_dsir_weights)
-    d = _table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_table(spark, sf_dir, "documents"))
     out = split_by_cluster(
         d, {"train": 0.9, "val": 0.05, "test": 0.05}, seed=11, threshold=0.8
     )
@@ -1961,11 +1926,7 @@ def q_ngram_novelty(spark, sf_dir):
     boundaries (the oracle regex-splits identically)."""
     from proxyfeatureextraction_spark.operators.curation import ngram_novelty
 
-    # single-split fixture repartitioned before the explode-heavy
-    # polynomial gram-hash map side (same fix as q_gopher_repetition)
-    d = _docs_with_lines(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_docs_with_lines(spark, sf_dir))
     return ngram_novelty(d, n=8)
 
 
@@ -2101,15 +2062,12 @@ def q_gopher_repetition(spark, sf_dir):
     dup-5..10-gram character fractions via ONE digest-keyed explode
     (the exchange carries (doc_id, n, xxhash64, len) — never gram
     text). Runs on line-injected docs so line signals are exercised.
-    The fixture is a single parquet split, so the wrapper repartitions
-    before the explode-heavy map side — the shape a multi-split
-    production input has for free. Value-safe for the gate: every
+    ``_spread`` fans the single-split fixture out before the
+    explode-heavy map side. Value-safe for the gate: every
     pre-division aggregate here is an integer count."""
     from proxyfeatureextraction_spark.functions.text import gopher_repetition
 
-    docs = _docs_with_lines(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = _spread(_docs_with_lines(spark, sf_dir))
     return gopher_repetition(docs)
 
 
@@ -2149,15 +2107,12 @@ def q_dsir_weights(spark, sf_dir):
     """DSIR importance weights (Xie et al. 2023): smoothed hashed
     n-gram log-likelihood ratio of target (lang='en') vs raw corpus —
     bucket tables bounded at 512 rows and broadcast; exchange carries
-    (doc_id, bucket int) only. The fixture is a single parquet split,
-    so the wrapper repartitions before the explode-heavy hashed-n-gram
-    map side (same fix as q_gopher_repetition: 8.1→1.9 s there) — the
-    shape a multi-split production input has for free."""
+    (doc_id, bucket int) only. ``_spread`` fans the single-split fixture
+    out before the explode-heavy hashed-n-gram map side (8.1→1.9 s on
+    q_gopher_repetition)."""
     from proxyfeatureextraction_spark.operators.curation import dsir_weights
 
-    d = _table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_table(spark, sf_dir, "documents"))
     return dsir_weights(d, d.filter(F.col("lang") == "en"), n_buckets=512)
 
 
@@ -2188,11 +2143,7 @@ def q_decontaminate(spark, sf_dir):
     set is broadcast — one corpus scan, zero full-data shuffles."""
     from proxyfeatureextraction_spark.operators.curation import decontaminate
 
-    # single-split fixture repartitioned before the explode-heavy
-    # 8-gram map side (same fix as q_gopher_repetition / q_dsir_weights)
-    d = _table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_table(spark, sf_dir, "documents"))
     return decontaminate(
         d.filter(F.col("doc_id") % 20 != 0),
         d.filter(F.col("doc_id") % 20 == 0),
@@ -2207,13 +2158,7 @@ def q_decontaminate_fuzzy(spark, sf_dir):
     train×train) + exact JVM verify."""
     from proxyfeatureextraction_spark.operators.curation import decontaminate_fuzzy
 
-    # single-split fixture repartitioned before the minhash signature
-    # map side (tokenize → 16 permutations → band fold runs per-row on
-    # the train split; one parquet split would serialize it on a single
-    # task — same fix as q_gopher_repetition / q_dsir_weights)
-    d = _table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_table(spark, sf_dir, "documents"))
     return decontaminate_fuzzy(
         d.filter(F.col("doc_id") % 20 != 0),
         d.filter(F.col("doc_id") % 20 == 0),
@@ -2264,11 +2209,7 @@ def q_curate_corpus(spark, sf_dir):
     doc: (doc_id, quality, reason, keep, split)."""
     from proxyfeatureextraction_spark.operators.curation import curate_corpus
 
-    # single-split fixture repartitioned before the quality-score +
-    # normalize+digest map side (same fix as q_gopher_repetition)
-    d = _table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_table(spark, sf_dir, "documents"))
     return curate_corpus(
         d.filter(F.col("doc_id") % 20 != 0),
         d.filter(F.col("doc_id") % 20 == 0),
@@ -2302,13 +2243,7 @@ def q_dedup_keep_best(spark, sf_dir):
     from proxyfeatureextraction_spark.functions.text import quality_score
     from proxyfeatureextraction_spark.operators.dedup import dedup_keep_best
 
-    # single-split fixture repartitioned before the normalize+digest
-    # map side (same fix as q_gopher_repetition / q_dsir_weights)
-    d = _table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    ).withColumn(
-        "quality", quality_score("text")
-    )
+    d = _spread(_table(spark, sf_dir, "documents")).withColumn("quality", quality_score("text"))
     return dedup_keep_best(d, "quality")
 
 

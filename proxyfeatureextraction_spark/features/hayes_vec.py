@@ -7,8 +7,9 @@ conversations — no per-conversation Python loop. The only sequential
 dimension left is K (the per-second pointer recurrence iterates K
 times over C-vectors).
 
-Semantics identical to ``kernels.hayes_vector`` (and thus the
-reference, quirks included) — pinned by tests/test_features_parity.py.
+Semantics are the reference's, quirks included — pinned to the
+independent per-conversation oracle ``tests/oracle/ref_hayes.py``
+(tests/test_features_parity.py and the random-corpus kernel tests).
 """
 
 from __future__ import annotations
@@ -98,8 +99,8 @@ def hayes_matrix_batch(pdf: pd.DataFrame, k: int, columns: list[str]) -> pd.Data
     # direction-masked times compacted in ROW order (stable argsort on
     # the mask; NaN pads move to the tail). np.sort would VALUE-order
     # the timestamps, which equals row order only for monotone rows —
-    # the loop kernel (ts[mi] → np.diff) diffs in row order, and the
-    # two kernels must agree on out-of-order timestamps too
+    # the reference (ts[mi] → np.diff) diffs in row order, and the
+    # kernel must agree with it on out-of-order timestamps too
     order_in = np.argsort(~mi, axis=1, kind="stable")
     order_out = np.argsort(~mo, axis=1, kind="stable")
     tin = np.take_along_axis(np.where(mi, ts, np.nan), order_in, axis=1)
@@ -126,7 +127,7 @@ def hayes_matrix_batch(pdf: pd.DataFrame, k: int, columns: list[str]) -> pd.Data
     )
 
     # time-percentile block (only its row-sum is emitted — Q1).
-    # t0 is the row MIN (loop kernel: ts.min()), equal to ts[:, 0] only
+    # t0 is the row MIN (reference: ts.min()), equal to ts[:, 0] only
     # for monotone rows; percentiles are order-insensitive, so each rel
     # block is value-sorted before the positional interpolation
     t0 = ts.min(axis=1)

@@ -5,7 +5,8 @@ Reference: ``host_feature_helpers.py:16-136``. Split by cost shape:
 - whole-trace scalars (duration, start-ts) → plain ``groupBy`` aggregates
   (algebraic, skew-safe),
 - first-50-row distribution stats (pandas *sample* std/skew/kurtosis,
-  ``mode()[0]`` smallest-tie — Q7) → Arrow-batched kernel over the
+  ``mode()[0]`` smallest-tie — Q7) → ``slice_stats``, run by the
+  fused extract plan's Arrow pass (``plans/extract.py``) over the
   K-bounded slice, vectorized with groupby moment sums (pandas
   ``nanops`` semantics replicated: 1e-14 zero-guard, 0 on zero
   variance, NaN below the dof minimum),
@@ -20,11 +21,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from proxyfeatureextraction_spark import schema as S
-from proxyfeatureextraction_spark.operators.grouped import map_whole_groups
-from proxyfeatureextraction_spark.operators.ordering import gated_first_k
 
 STAT_ORDER = ("mean", "median", "mode", "std", "skew", "kurtosis")
 
@@ -84,43 +82,26 @@ def _side_stats(conv: pd.Series, vals: pd.Series, all_convs: pd.Index, label: st
     return out
 
 
-def _slice_kernel(gw: bool):
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        conv = pdf[S.CONV]
-        all_convs = pd.Index(conv.unique())
-        ts = pdf[S.TS_SEC]
-        g = ts.groupby(conv)
-        span = g.max() - g.min()
-        n = g.size()
-        rate = (n / span.where(span > 0)).fillna(0.0)
+def slice_stats(pdf: pd.DataFrame, gw: bool) -> pd.DataFrame:
+    """pkts_rate + the 18 side stats per conversation of a batch of
+    whole, gated first-K slices, under the published column names."""
+    conv = pdf[S.CONV]
+    all_convs = pd.Index(conv.unique())
+    ts = pdf[S.TS_SEC]
+    g = ts.groupby(conv)
+    span = g.max() - g.min()
+    n = g.size()
+    rate = (n / span.where(span > 0)).fillna(0.0)
 
-        sent_mask = (pdf[S.DIR] == 1) if not gw else (pdf[S.DIR] == -1)
-        vals = pdf[S.N_CHARS].astype(float)
-        total = _side_stats(conv, vals, all_convs, "vol")
-        sent = _side_stats(conv[sent_mask], vals[sent_mask], all_convs, "sent")
-        recv = _side_stats(conv[~sent_mask], vals[~sent_mask], all_convs, "recv")
+    sent_mask = (pdf[S.DIR] == 1) if not gw else (pdf[S.DIR] == -1)
+    vals = pdf[S.N_CHARS].astype(float)
+    total = _side_stats(conv, vals, all_convs, "vol_total_pkts")
+    sent = _side_stats(conv[sent_mask], vals[sent_mask], all_convs, "bytes_sent")
+    recv = _side_stats(conv[~sent_mask], vals[~sent_mask], all_convs, "bytes_recv")
 
-        out = pd.concat(
-            [rate.rename("pkts_rate").reindex(all_convs), total, sent, recv], axis=1
-        )
-        out.insert(0, S.CONV, all_convs)
-        return out.reset_index(drop=True)
-
-    return kernel
-
-
-def _slice_schema() -> T.StructType:
-    fields = [T.StructField(S.CONV, T.StringType()), T.StructField("pkts_rate", T.DoubleType())]
-    for label in ("vol", "sent", "recv"):
-        fields += [T.StructField(f"{s}_{label}", T.DoubleType()) for s in STAT_ORDER]
-    return T.StructType(fields)
-
-
-_RENAME = {
-    **{f"{s}_vol": f"{s}_vol_total_pkts" for s in STAT_ORDER},
-    **{f"{s}_sent": f"{s}_bytes_sent" for s in STAT_ORDER},
-    **{f"{s}_recv": f"{s}_bytes_recv" for s in STAT_ORDER},
-}
+    out = pd.concat([rate.rename("pkts_rate").reindex(all_convs), total, sent, recv], axis=1)
+    out.insert(0, S.CONV, all_convs)
+    return out.reset_index(drop=True)
 
 
 def trace_scalars(
@@ -161,31 +142,3 @@ def trace_scalars(
         F.when(F.col("_last_key"), F.lit(0.0)).otherwise(F.col("_gap_next")),
     )
     return out.select(gap_scope, S.CONV, "duration", "gap_between_conns")
-
-
-def host_features(
-    derived: DataFrame,
-    gw: bool = False,
-    max_pkts: int = 20,
-    comp_pkts_limit: int = 50,
-    gap_scope: str = S.FOLDER,
-) -> DataFrame:
-    # first-50 slice stats (gate ≥ max_pkts, slice ≤ comp_pkts_limit)
-    sliced = gated_first_k(derived, max_pkts, slice_k=comp_pkts_limit).select(
-        S.CONV, S.TURN, S.TS, S.TS_SEC, S.DIR, S.N_CHARS
-    )
-    stats = map_whole_groups(sliced, _slice_kernel(gw), _slice_schema())
-    for old, new in _RENAME.items():
-        stats = stats.withColumnRenamed(old, new)
-
-    return (
-        trace_scalars(derived, max_pkts=max_pkts, gap_scope=gap_scope)
-        .join(stats, S.CONV, "inner")
-        .select(
-            gap_scope, S.CONV, "pkts_rate", "duration",
-            *[_RENAME[f"{s}_vol"] for s in STAT_ORDER],
-            *[_RENAME[f"{s}_sent"] for s in STAT_ORDER],
-            *[_RENAME[f"{s}_recv"] for s in STAT_ORDER],
-            "gap_between_conns",
-        )
-    )

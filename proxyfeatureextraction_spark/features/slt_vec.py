@@ -5,8 +5,8 @@ ragged (1..K rows). The batch is scattered into NaN-padded (C, K)
 matrices; per-side sequences are materialized with an argsort gather
 on within-conv position (rows are canonically ordered), and every
 checkpoint statistic is a fixed-width slice reduction — no per-conv
-Python loop. Semantics pinned to kernels.slt_vector (and the oracle)
-by tests.
+Python loop. Semantics pinned to the independent per-conversation
+oracle ``tests/oracle/ref_slt.py`` by tests.
 """
 
 from __future__ import annotations

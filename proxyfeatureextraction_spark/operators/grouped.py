@@ -13,7 +13,7 @@ GROUP. At 10^12 turns / ~3×10^10 conversations that per-group overhead
    vectorize across MANY whole conversations at once.
 
 Skew note: a single conversation larger than executor memory cannot be
-order-preserving-split; upstream gates (`first_k`) bound group size for
+order-preserving-split; upstream gates (`gated_first_k`) bound group size for
 every first-K feature family, and `operators.skew` handles the
 algebraic whole-trace aggregates.
 """

@@ -1,4 +1,4 @@
-"""Canonical ordering, group-size gates and first-K slicing.
+"""Canonical ordering and the gated first-K slice.
 
 The reference's operative per-group order is stable row order
 (``preprocessing.py:226`` restores it after transforms; SURVEY.md §1.3).
@@ -34,33 +34,12 @@ def canonical(df: DataFrame, partitions: int | None = None) -> DataFrame:
     return df.repartition(*parts, S.CONV).sortWithinPartitions(S.CONV, *ORDER_COLS)
 
 
-def with_group_count(df: DataFrame, col: str = "_n") -> DataFrame:
-    """Full-group row count per conversation (one shuffle, no join).
-
-    Reference analog: ``corr_extractor.py:149`` group sizes.
-    """
-    return df.withColumn(col, F.count(F.lit(1)).over(Window.partitionBy(S.CONV)))
-
-
-def min_group_size(df: DataFrame, k: int) -> DataFrame:
-    """Keep only conversations with ≥ k turns (P4: the pkt_limit gate,
-    ``preprocessing.py:208``, ``ta_extractor.py:45``)."""
-    return with_group_count(df).filter(F.col("_n") >= k).drop("_n")
-
-
-def first_k(df: DataFrame, k: int, order_cols=ORDER_COLS) -> DataFrame:
-    """First k turns per conversation in canonical order (P5,
-    ``corr_extractor.py:156-158``). Bounds every downstream group to k
-    rows — the primary skew eliminator at 10^12-turn scale."""
-    rn = F.row_number().over(conv_window(order_cols))
-    return df.withColumn("_rn", rn).filter(F.col("_rn") <= k).drop("_rn")
-
-
-def gated_first_k(df: DataFrame, k: int, slice_k: int | None = None) -> DataFrame:
-    """≥k gate + first-(slice_k or k) slice in a single window pass."""
-    slice_k = slice_k or k
+def gated_first_k(df: DataFrame, k: int) -> DataFrame:
+    """≥k gate + first-k slice in canonical order, one window pass
+    (P4/P5, ``corr_extractor.py:149-158``). Bounds every downstream
+    group to k rows — the primary skew eliminator."""
     w = conv_window()
     out = df.withColumn("_rn", F.row_number().over(w)).withColumn(
         "_n", F.count(F.lit(1)).over(Window.partitionBy(S.CONV))
     )
-    return out.filter((F.col("_n") >= k) & (F.col("_rn") <= slice_k)).drop("_rn", "_n")
+    return out.filter((F.col("_n") >= k) & (F.col("_rn") <= k)).drop("_rn", "_n")

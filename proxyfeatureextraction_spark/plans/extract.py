@@ -1,4 +1,6 @@
-"""Full feature-extraction plan — the engine's flagship pipeline.
+"""Full feature-extraction plan — the engine's flagship pipeline and
+the only per-conversation path for the Hayes, SLT, RTT and host
+families (each pinned against its oracle in ``tests/oracle``).
 
 Fuses the three slice-kernel families (Hayes-150, SLT, host slice
 stats) into ONE shuffle + ONE Arrow pass: the canonical repartition by
@@ -6,9 +8,6 @@ conv_id feeds a single kernel that computes all 324 slice-derived
 columns per conversation. The purely relational parts (host duration /
 Q5 gap, RTT triplet scan, gateway correlation) stay JVM-side and join
 on conv_id afterwards.
-
-Separate-extractor entry points remain in ``features/*`` (same
-numerics — the fused kernel calls the same batch kernels).
 """
 
 from __future__ import annotations
@@ -21,27 +20,15 @@ from pyspark.sql import types as T
 
 from proxyfeatureextraction_spark import schema as S
 from proxyfeatureextraction_spark.features.hayes_vec import hayes_matrix_batch
+from proxyfeatureextraction_spark.features.host import STAT_ORDER, slice_stats, trace_scalars
 from proxyfeatureextraction_spark.features.names import HAYES_NAMES, SLT_NAMES
 from proxyfeatureextraction_spark.features.slt_vec import slt_matrix_batch
 from proxyfeatureextraction_spark.operators.grouped import map_whole_groups
 from proxyfeatureextraction_spark.operators.ordering import conv_window
 
-HOST_SLICE_COLS = [
-    "pkts_rate",
-    *[f"{s}_vol_total_pkts" for s in ("mean", "median", "mode", "std", "skew", "kurtosis")],
-    *[f"{s}_bytes_sent" for s in ("mean", "median", "mode", "std", "skew", "kurtosis")],
-    *[f"{s}_bytes_recv" for s in ("mean", "median", "mode", "std", "skew", "kurtosis")],
+HOST_SLICE_COLS = ["pkts_rate"] + [
+    f"{s}_{side}" for side in ("vol_total_pkts", "bytes_sent", "bytes_recv") for s in STAT_ORDER
 ]
-
-
-def _host_slice_stats(pdf: pd.DataFrame, gw: bool) -> pd.DataFrame:
-    """The SHARED host slice kernel (features/host._slice_kernel) under
-    the fused plan's published column names (host._RENAME) — one kernel
-    body, so a slice-stat semantics fix can never leave the fused plan
-    and the standalone extractor disagreeing."""
-    from proxyfeatureextraction_spark.features.host import _RENAME, _slice_kernel
-
-    return _slice_kernel(gw)(pdf).rename(columns=_RENAME)
 
 
 def fused_slice_features(
@@ -62,12 +49,17 @@ def fused_slice_features(
     (``pre_ordered=True`` — no second repartition of the slice).
 
     ``include_rtt=True`` additionally computes the RTT-ratio scalar
-    (features/rtt.py semantics, reference ``thesis_extractor.py:13-125``)
-    as pure JVM window columns on the SAME pass — trip flags and the two
-    first-trip deltas are unbounded-frame window aggregates over the
-    full conversation, evaluated before the slice filter — and passes
-    the per-conversation result through the kernel. This folds what was
-    a separate full-data shuffle into the existing one.
+    (reference ``thesis_extractor.py:13-125``) as pure JVM window
+    columns on the SAME pass, and passes the per-conversation result
+    through the kernel. A "perfect round trip" at row i means rows i+1
+    and i+2 both flow OPPOSITE to row i; the ratio is the first trip's
+    first delta over the second trip's second delta. The reference's
+    ``head(pkt_limit)`` is dead code, so trip flags and deltas are
+    unbounded-frame window aggregates over the FULL conversation,
+    evaluated before the slice filter; pkt_limit only gates which
+    conversations qualify. lead() reads the future: this is a
+    whole-conversation scalar, NON-point-in-time (kept off any as-of
+    surface).
     """
     w = conv_window()
     wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -134,7 +126,7 @@ def fused_slice_features(
         )
         host_in = pdf[gated].reset_index(drop=True)
         host = (
-            _host_slice_stats(host_in, gw)
+            slice_stats(host_in, gw)
             if len(host_in)
             else pd.DataFrame(columns=[S.CONV, *HOST_SLICE_COLS])
         )
@@ -155,11 +147,9 @@ def fused_slice_features(
 
 
 def host_trace_scalars(derived: DataFrame, max_pkts: int = 20, gap_scope: str = S.FOLDER) -> DataFrame:
-    """duration + Q5 gap_between_conns — shared rank-self-join
-    implementation (features/host.py:trace_scalars; judge r1 finding #2
-    rationale documented there)."""
-    from proxyfeatureextraction_spark.features.host import trace_scalars
-
+    """duration + Q5 gap_between_conns — rank-self-join implementation
+    (features/host.py:trace_scalars; judge r1 finding #2 rationale
+    documented there)."""
     return trace_scalars(derived, max_pkts=max_pkts, gap_scope=gap_scope)
 
 

@@ -1,66 +1,65 @@
-"""The matrix-vectorized Hayes kernel is bit-equivalent to the
-per-conv loop kernel on a large random corpus (both are oracle-pinned
-elsewhere; this covers paths the small fixture may miss)."""
+"""The matrix-vectorized Hayes and SLT kernels equal the independent
+per-conversation loops of ``tests/oracle`` on large random corpora
+(this covers paths the small fixture may miss)."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
+from proxyfeatureextraction_spark import schema as S
 from proxyfeatureextraction_spark.features.hayes_vec import hayes_matrix_batch
-from proxyfeatureextraction_spark.features.kernels import hayes_batch
-from proxyfeatureextraction_spark.features.names import HAYES_NAMES
+from proxyfeatureextraction_spark.features.names import HAYES_NAMES, SLT_NAMES
+from proxyfeatureextraction_spark.features.slt_vec import slt_matrix_batch
 from proxyfeatureextraction_spark.synth import synth_transcripts_pdf
+from tests.oracle.packet_view import CLIENT_IPS, to_packet_view
+from tests.oracle.ref_hayes import hayes_by_conn
+from tests.oracle.ref_slt import slt_by_conn
+
+ATOL = 1e-5
 
 
-def _slice20(seed: int):
-    pdf = synth_transcripts_pdf(n_convs=500, seed=seed)
-    pdf = pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    ts0 = pdf.groupby("folder_name")["ts"].transform("min")
-    pdf["ts_sec"] = (pdf["ts"] - ts0).dt.total_seconds()
-    pdf["dir"] = np.where(pdf["role"] == "user", 1, -1)
-    pdf["n_chars"] = pdf["text"].str.len()
-    sizes = pdf.groupby("conv_id")["turn_idx"].transform("size")
-    sl = pdf[sizes >= 20].groupby("conv_id").head(20)
-    return sl.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+def _head20(packets: pd.DataFrame, gated: bool) -> pd.DataFrame:
+    """The packet view in the kernels' columns, cut to each
+    conversation's first 20 rows (only conversations with ≥20 if
+    ``gated``)."""
+    pv = pd.DataFrame(
+        {
+            S.CONV: packets["conn"],
+            S.TS_SEC: packets["ts_relative"],
+            S.DIR: np.where(packets["src_ip"].isin(CLIENT_IPS), 1, -1),
+            S.N_CHARS: packets["pkt_len"],
+        }
+    )
+    if gated:
+        pv = pv[pv.groupby(S.CONV)[S.CONV].transform("size") >= 20]
+    return pv.groupby(S.CONV).head(20).reset_index(drop=True)
+
+
+def _assert_matches(got: pd.DataFrame, oracle: pd.DataFrame, names: list[str]):
+    got = got.set_index(S.CONV).sort_index()
+    oracle = oracle.rename(columns={"conn": S.CONV}).set_index(S.CONV).sort_index()
+    assert len(oracle) and list(got.index) == list(oracle.index)
+    for c in names:
+        np.testing.assert_allclose(
+            got[c].astype(float), oracle[c].astype(float), atol=ATOL, equal_nan=True, err_msg=c
+        )
 
 
 def test_matrix_kernel_equals_loop_kernel():
     for seed in (123, 7):
-        sl = _slice20(seed)
-        a = hayes_batch(sl, columns=HAYES_NAMES).sort_values("conv_id").reset_index(drop=True)
-        b = hayes_matrix_batch(sl, 20, HAYES_NAMES).sort_values("conv_id").reset_index(drop=True)
-        assert (a["conv_id"] == b["conv_id"]).all()
-        for c in HAYES_NAMES:
-            np.testing.assert_allclose(a[c], b[c], atol=1e-9, equal_nan=True, err_msg=c)
+        packets = to_packet_view(synth_transcripts_pdf(n_convs=500, seed=seed))
+        got = hayes_matrix_batch(_head20(packets, gated=True), 20, HAYES_NAMES)
+        _assert_matches(got, hayes_by_conn(packets, 20), HAYES_NAMES)
 
 
 def test_slt_matrix_kernel_equals_loop_kernel():
-    from proxyfeatureextraction_spark.features.kernels import slt_batch
-    from proxyfeatureextraction_spark.features.names import SLT_NAMES
-    from proxyfeatureextraction_spark.features.slt_vec import slt_matrix_batch
-
-    pdf = synth_transcripts_pdf(n_convs=400, seed=55)
-    pdf = pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    ts0 = pdf.groupby("folder_name")["ts"].transform("min")
-    pdf["ts_sec"] = (pdf["ts"] - ts0).dt.total_seconds()
-    pdf["dir"] = np.where(pdf["role"] == "user", 1, -1)
-    pdf["n_chars"] = pdf["text"].str.len()
-    sl = (
-        pdf.groupby("conv_id").head(20)
-        .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    )
-    a = slt_batch(sl, columns=SLT_NAMES).sort_values("conv_id").reset_index(drop=True)
-    b = slt_matrix_batch(sl, 20, SLT_NAMES).sort_values("conv_id").reset_index(drop=True)
-    assert (a["conv_id"] == b["conv_id"]).all()
-    for c in SLT_NAMES:
-        np.testing.assert_allclose(
-            a[c].astype(float), b[c].astype(float), atol=1e-9, equal_nan=True, err_msg=c
-        )
+    packets = to_packet_view(synth_transcripts_pdf(n_convs=400, seed=55))
+    got = slt_matrix_batch(_head20(packets, gated=False), 20, SLT_NAMES)
+    _assert_matches(got, slt_by_conn(packets, 20), SLT_NAMES)
 
 
 def test_matrix_kernel_empty():
-    import pandas as pd
-
     out = hayes_matrix_batch(
         pd.DataFrame({"conv_id": [], "ts_sec": [], "dir": [], "n_chars": []}),
         20,

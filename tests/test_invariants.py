@@ -116,19 +116,3 @@ def test_scan_pushes_filters_and_prunes_columns(spark):
     )
     assert "PushedFilters: [IsNotNull(user_id), EqualTo(user_id,1)]" in plan
     assert "ReadSchema: struct<event_id:bigint,user_id:bigint>" in plan
-
-
-def test_host_features_plan_has_no_unbounded_collect(spark, transcripts_df):
-    """Same audit for the standalone host_features API (it previously
-    kept its own collect_list-window Q5 variant after the fused plan
-    was fixed; both now share the rank self-join)."""
-    from proxyfeatureextraction_spark.features.host import host_features
-
-    plan = (
-        host_features(with_derived(transcripts_df))
-        ._jdf.queryExecution()
-        .analyzed()
-        .toString()
-        .lower()
-    )
-    assert "collect_list" not in plan and "collect_set" not in plan

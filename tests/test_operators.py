@@ -25,11 +25,18 @@ def test_gated_first_k(spark, transcripts_df, transcripts_pdf):
 
 
 def test_min_group_size_and_first_k(spark, transcripts_df, transcripts_pdf):
-    out = ordering.first_k(ordering.min_group_size(transcripts_df, 50), 50).toPandas()
+    """The >= 50-turn gate and the first-50 slice that the Hayes features
+    read, both through ``gated_first_k``."""
+    out = ordering.gated_first_k(transcripts_df, 50).toPandas()
     pdf = _canon_pdf(transcripts_pdf)
     counts = pdf.groupby(S.CONV).size()
+    assert (counts >= 50).any(), "fixture has no conversation with >= 50 turns"
     assert set(out[S.CONV]) == set(counts[counts >= 50].index)
     assert (out.groupby(S.CONV).size() == 50).all()
+    exp = pdf[pdf[S.CONV].isin(counts[counts >= 50].index)].groupby(S.CONV).head(50)
+    key = [S.CONV, S.TURN]
+    got = out.sort_values(key)[key].reset_index(drop=True)
+    assert got.equals(exp.sort_values(key)[key].reset_index(drop=True))
 
 
 def test_lag_backfill_prefix(spark, transcripts_df, transcripts_pdf):
