@@ -52,6 +52,28 @@ def _local_dir() -> str:
     return "/tmp"
 
 
+def _mem_total_bytes() -> int | None:
+    """``MemTotal`` of ``/proc/meminfo``; None where it cannot be read."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return None
+
+
+def _default_driver_memory() -> str:
+    """Half the host's RAM, at most 64g: a local-mode driver JVM shares
+    the host with its Python workers, and a heap sized past RAM lets the
+    kernel's OOM killer end the process. 64g where RAM is unknown."""
+    total = _mem_total_bytes()
+    if total is None:
+        return "64g"
+    return f"{min(64 * 1024, total // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "proxyfeatureextraction_spark",
     master: str | None = None,
@@ -91,7 +113,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "64g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # local-mode shuffle on tmpfs: the sandbox's virtio disk
         # serializes shuffle spill and caps thread scaling; a real

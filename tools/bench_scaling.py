@@ -211,7 +211,7 @@ Hayes-150 + SLT + host + RTT + gateway-correlation
 (`plans.extract.extract_features`) at local[{high}]:
 **{ex["turns_per_sec"]:,.0f} turns/sec** ({ex["best_sec"]:.1f} s on
 {ex["turns"]:,} turns). This pipeline is a DAG of ~40 stages (five
-joined families incl. the corr range-join fan-out); at sandbox input
+joined families incl. the corr bucket join and batch kernel); at small input
 sizes its wall time is dominated by per-stage scheduling barriers
 (~constant per stage), which do not decrease with core count — the
 single-host analog of driver overhead, amortized away at real input
