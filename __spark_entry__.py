@@ -1747,8 +1747,8 @@ def q_dedup_survivors(spark, sf_dir):
 
 def q_dedup_near_survivors(spark, sf_dir):
     """Near-dup last mile: jaccard pairs → connected components
-    (alternating large-star/small-star, operators/dedup.dedup_clusters)
-    → TOTAL (doc_id, cluster_rep) assignment over the corpus; survivors
+    (operators/dedup.dedup_clusters: labeled on the driver under the
+    broadcast threshold, large-star/small-star above it) → TOTAL (doc_id, cluster_rep) assignment over the corpus; survivors
     are the cluster_rep == doc_id rows. Oracle: recursive-CTE transitive
     closure over the same pair list, min reachable id per doc."""
     from proxyfeatureextraction_spark.operators.dedup import dedup_clusters, jaccard_pairs
@@ -1762,7 +1762,7 @@ def q_dedup_near_survivors(spark, sf_dir):
 
 def q_dedup_corpus(spark, sf_dir):
     """The one-call dedup pipeline: normalize → exact-dup edges + rep-
-    level near-dup pairs (auto-routed) → star-contraction clusters →
+    level near-dup pairs (auto-routed) → connected-component clusters →
     total (doc_id, cluster_rep, is_survivor). Oracle: the same
     normalize SQL feeding the jaccard pair list, same-text edges, and a
     recursive closure."""
@@ -2203,7 +2203,7 @@ def q_pii_scrub(spark, sf_dir):
 
 def q_curate_corpus(spark, sf_dir):
     """The one-call corpus-preparation pipeline: quality filter (≥0.8)
-    → near-dup removal (normalize + Jaccard 0.8 + star contraction) →
+    → near-dup removal (normalize + Jaccard 0.8 + connected components) →
     8-gram decontamination of survivors vs the eval split (doc_id %
     20 == 0) → deterministic train/val hash split. One labeled row per
     doc: (doc_id, quality, reason, keep, split)."""

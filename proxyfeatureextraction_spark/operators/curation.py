@@ -687,7 +687,7 @@ def curate_corpus(
     Every stage is the already-gated operator (``quality_score``,
     ``dedup_corpus``, ``decontaminate``, ``split_assign``), so the
     whole composition has a DuckDB oracle; scale shape is the union of
-    the stages' (the dedup star-contraction dominates).
+    the stages' (the dedup stage dominates).
     """
     from proxyfeatureextraction_spark.functions.text import quality_score
     from proxyfeatureextraction_spark.operators.dedup import dedup_corpus

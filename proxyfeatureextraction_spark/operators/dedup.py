@@ -260,17 +260,34 @@ def jaccard_pairs(
     )
     # the tokenize→sort→signature projection feeds BOTH the distinct-set
     # table and the doc→set mapping below; materialize it once (the
-    # guard's count job triggers it) instead of executing the
+    # guard's aggregate job triggers it) instead of executing the
     # HOF-heavy projection per consumer (~2 s per call at sf0.1).
     # localCheckpoint, not persist: blocks are released by the
     # ContextCleaner once the result frame is dropped. The stored rows
     # are the same (sig, ws) payload this plan already shuffles.
     docs = docs.localCheckpoint(eager=False)
-    dsets = docs.select("sig", "ws").dropDuplicates(["sig"]).persist()
+    # one row per distinct set, carrying how many docs share it: the
+    # guard below sums the multiplicities into the doc count the
+    # broadcast gate needs, so no separate count job runs
+    dsets = (
+        docs.groupBy("sig")
+        .agg(F.first("ws").alias("ws"), F.count(F.lit(1)).alias("_n"))
+        .persist()
+    )
     try:
-        n_sets, n_vocab = dsets.select(
-            "sig", F.explode_outer("ws").alias("w")
-        ).agg(F.countDistinct("sig"), F.countDistinct("w")).first()
+        n_sets, n_vocab, n_docs = (
+            dsets.select("sig", "_n", F.posexplode_outer("ws").alias("_p", "w"))
+            .agg(
+                F.countDistinct("sig"),
+                F.countDistinct("w"),
+                # each set counted once: at its first word, or at the
+                # single NULL row posexplode_outer emits for an empty set
+                F.sum(
+                    F.when((F.col("_p") == 0) | F.col("_p").isNull(), F.col("_n"))
+                ),
+            )
+            .first()
+        )
         if n_sets == 0:
             return spark.createDataFrame([], empty)
         if max_sets is not None:
@@ -287,7 +304,10 @@ def jaccard_pairs(
                     f"minhash_lsh_candidates() and verify candidate pairs "
                     f"exactly with a distributed join instead."
                 )
-        corpus = dsets.toPandas().sort_values("sig", kind="stable").reset_index(drop=True)
+        corpus = (
+            dsets.select("sig", "ws").toPandas()
+            .sort_values("sig", kind="stable").reset_index(drop=True)
+        )
     finally:
         dsets.unpersist()
     vocab: dict[str, int] = {}
@@ -370,12 +390,12 @@ def jaccard_pairs(
     # A checkpointed relation reports no size estimate, so the planner
     # always sort-merge-joins the re-expansion — shuffling the (large)
     # set-pair stream twice. The mapping is two longs per input doc:
-    # when the doc count (cheap — the blocks are materialized by the
-    # guard job above) fits a sane broadcast budget, hint it so both
-    # expansion joins pipeline into the kernel's stage with no
-    # exchange at all; past the gate the sort-merge plan stands.
+    # when the doc count (summed by the guard aggregate above) fits a
+    # sane broadcast budget, hint it so both expansion joins pipeline
+    # into the kernel's stage with no exchange at all; past the gate
+    # the sort-merge plan stands.
     ds = doc_sets
-    if docs.count() <= 4_000_000:
+    if n_docs <= 4_000_000:
         ds = F.broadcast(doc_sets)
     a, b = ds.alias("a"), ds.alias("b")
     return (
@@ -1251,7 +1271,8 @@ def dedup_corpus(
        ``'scalable'`` → ``jaccard_pairs_scalable`` (LSH + exact verify),
        ``'auto'`` → exact first, scalable when its fail-fast bound
        raises (the guard fires at plan-build, before any collect);
-    4. ``dedup_clusters`` star contraction over the union edge list →
+    4. ``dedup_clusters`` over the union edge list (driver labeling
+       under the broadcast threshold, star contraction above it) →
        total assignment; survivors are ``cluster_rep == doc_id``.
 
     Keep the RAW text for training; dedup on the canonical form.
@@ -1274,7 +1295,7 @@ def dedup_corpus(
     # materialization each consumer re-executes the scan → normalize →
     # sha2 lineage independently (~6-8 executions measured). Persisted
     # MEMORY_AND_DISK (spills when it outgrows memory) and explicitly
-    # unpersisted below, once the contraction's eager checkpoint has
+    # unpersisted below, once dedup_clusters' edge checkpoint has
     # materialized every consumer.
     from pyspark import StorageLevel
 
@@ -1331,12 +1352,15 @@ def dedup_corpus(
             max_iter=max_iter, pairs_distinct=True,
         )
     finally:
-        # dedup_clusters' initial EAGER checkpoint has materialized every
-        # base consumer (exact edges + the near route), and the returned
-        # frame's lineage reads only checkpointed edge blocks + df — so
-        # the cache can be released here instead of leaking for the
-        # session's lifetime (ADVICE r5: persisted working sets must not
-        # accumulate across calls)
+        # the size gate's bounded collect in dedup_clusters (with the
+        # gate off or non-integral ids, the contraction's eager
+        # checkpoint) has computed every base consumer (exact edges +
+        # the near route) into checkpoint blocks, and the returned
+        # frame's lineage reads only df plus the driver-labeled local
+        # frame or checkpointed edge blocks — so the cache can be
+        # released here instead of leaking for the session's lifetime
+        # (ADVICE r5: persisted working sets must not accumulate across
+        # calls)
         base.unpersist()
     return assign.withColumn(
         "is_survivor", F.col("cluster_rep") == F.col("doc_id")
@@ -1461,7 +1485,7 @@ def dedup_incremental(
     # normalized+digested union feeds the clash probe, the rep
     # aggregate, the exact-edge join and the whole near-dup route —
     # without materialization each re-runs normalize+sha2. Unpersisted
-    # once the contraction's eager checkpoint has consumed them; the
+    # once dedup_clusters' edge checkpoint has consumed them; the
     # two post-clustering consumers read only (doc_id, _new), which
     # column-pruning reduces to a plain scan.
     from pyspark import StorageLevel
@@ -1497,12 +1521,16 @@ def dedup_incremental(
     # e.g. a new id smaller than its corpus twin's id). All grouping /
     # joining is on the (xxhash64, sha2) content digest, never raw text.
     reps = union.groupBy("_dh", "_ds").agg(F.min("doc_id").alias("_rep"))
-    rep_flag = union.select(
+    # one row per id: a re-landed file is two union rows (batch and
+    # corpus), and either side of the edge join would emit its edge
+    # twice — breaking the pairs_distinct promise below. The id is new
+    # when any of its rows is.
+    ids = union.groupBy("doc_id", "_dh", "_ds").agg(F.bool_or("_new").alias("_new"))
+    rep_flag = ids.select(
         F.col("doc_id").alias("_rep"), F.col("_new").alias("_rep_new")
     )
     exact_edges = (
-        union.select("doc_id", "_new", "_dh", "_ds")
-        .join(reps, ["_dh", "_ds"])
+        ids.join(reps, ["_dh", "_ds"])
         .join(rep_flag, "_rep")
         .filter(
             (F.col("doc_id") != F.col("_rep")) & (F.col("_new") | F.col("_rep_new"))
@@ -1593,19 +1621,33 @@ def dedup_clusters(
     treated as edges and each connected component is labeled with its
     minimum doc id.
 
-    Algorithm: alternating large-star / small-star (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — each
-    round is one groupBy + one equi-join over the edge list, fully
-    distributed, and the edge set converges to per-component stars in
-    O(log n) rounds regardless of chain length (plain min-label
-    propagation needs O(diameter) rounds — pathological on long
-    chains). Per-round checkpointing truncates the loop's lineage so
-    the plan stays flat: ``reliable=False`` (default) uses
-    ``localCheckpoint`` — executor-local blocks, cheapest, but an
-    executor loss mid-contraction fails the job; ``reliable=True``
-    uses reliable ``checkpoint`` to the directory set via
-    ``spark.sparkContext.setCheckpointDir`` (point it at durable
-    storage on a real cluster — raises up front if unset).
+    Size gate: the filtered edge list is checkpointed once and at most
+    ``cap + 1`` of its rows are collected (with ``reliable=False`` that
+    one job also fills the checkpoint), where ``cap`` is
+    ``spark.sql.autoBroadcastJoinThreshold // 16`` (two longs per edge:
+    655,360 edges at the 10 MB default; ``-1`` disables the gate).
+    When the edge list fits under ``cap`` and the ids are integral, the
+    components are labeled on the driver (vectorized min-label hooking
+    with pointer jumping, ``_label_components``) and shipped back as a
+    local frame. The gate exists because each star round below is
+    several stage jobs plus a checksum job — fixed cost that dominates
+    every graph of a few hundred edges — while a graph the planner would
+    broadcast anyway is cheaper to solve in one process. The driver path
+    has no round budget, so it never raises the ``max_iter`` error.
+
+    Otherwise (larger graphs, non-integral ids): alternating large-star
+    / small-star (Kiveris et al., "Connected Components in MapReduce
+    and Beyond", SoCC'14) — each round is one groupBy + one equi-join
+    over the edge list, fully distributed, and the edge set converges
+    to per-component stars in O(log n) rounds regardless of chain
+    length (plain min-label propagation needs O(diameter) rounds —
+    pathological on long chains). Per-round checkpointing truncates the
+    loop's lineage so the plan stays flat: ``reliable=False`` (default)
+    uses ``localCheckpoint`` — executor-local blocks, cheapest, but an
+    executor loss mid-contraction fails the job; ``reliable=True`` uses
+    reliable ``checkpoint`` (for the gate's edge checkpoint too) to the
+    directory set via ``spark.sparkContext.setCheckpointDir`` (point it
+    at durable storage on a real cluster — raises up front if unset).
 
     ``nodes`` (any DataFrame with ``id_col``) adds singleton rows
     (cluster_rep = self) for docs that never paired, so the output is a
@@ -1615,17 +1657,18 @@ def dedup_clusters(
     ``pairs_distinct=True`` declares that the producer emits each
     undirected pair at most once (true for ``jaccard_pairs`` /
     ``jaccard_pairs_scalable`` output unioned with exact-dup edges —
-    each (a, b) arises from exactly one (set(a), set(b))): the initial
-    symmetrized edge list is then provably duplicate-free and its
-    ``distinct`` (a full shuffle of 2×|pairs| rows) is skipped. The
+    each (a, b) arises from exactly one (set(a), set(b))): the
+    contraction's initial symmetrized edge list is then provably
+    duplicate-free and its ``distinct`` (a full shuffle of 2×|pairs|
+    rows) is skipped; the driver path ignores the flag. The
     per-round ``distinct`` inside the contraction is unaffected, so a
     wrong declaration costs correctness nothing — the first round
     re-dedups — but the checksum convergence test could need one extra
     round.
     """
+    spark = pairs.sparkSession
     if reliable:
-        sc = pairs.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
+        if spark.sparkContext.getCheckpointDir() is None:
             raise ValueError(
                 "dedup_clusters(reliable=True) needs a reliable checkpoint "
                 "directory: call spark.sparkContext.setCheckpointDir(<durable "
@@ -1634,10 +1677,82 @@ def dedup_clusters(
         _ckpt = lambda d, eager: d.checkpoint(eager=eager)  # noqa: E731
     else:
         _ckpt = lambda d, eager: d.localCheckpoint(eager=eager)  # noqa: E731
-    e = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")).filter(
-        F.col("u") != F.col("v")
+    # a local checkpoint is marked lazily: the bounded collect below is
+    # the job that computes it (each partition is stored whole when first
+    # read, and Spark completes a marked checkpoint at the end of the
+    # job), so the gate costs one job rather than a checkpoint job plus a
+    # collect job. A lazily marked reliable checkpoint would be written
+    # by a second job that recomputes the edges, so that one is eager.
+    e = _ckpt(
+        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")).filter(
+            F.col("u") != F.col("v")
+        ),
+        reliable,
     )
     sym0 = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    # the union's widened type is the contraction's output id type
+    id_type = sym0.schema["u"].dataType
+    # the parsed byte value: the conf string may read "10485760b", "10MB"
+    cap = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold() // 16
+    reps = None
+    if cap >= 0 and isinstance(id_type, T.IntegralType):
+        # one job: every partition is cut to cap + 1 rows before the
+        # single-partition shuffle, so the collect stays bounded however
+        # large the graph is, and the edges are still computed in parallel
+        uv = e.limit(cap + 1).toArrow()
+        if uv.num_rows <= cap:
+            ids, rep = _label_components(
+                uv.column("u").to_numpy().astype(np.int64),
+                uv.column("v").to_numpy().astype(np.int64),
+            )
+            reps = spark.createDataFrame(
+                pd.DataFrame({id_col: ids, "cluster_rep": rep}),
+                T.StructType(
+                    [T.StructField(c, id_type) for c in (id_col, "cluster_rep")]
+                ),
+            )
+    if reps is None:
+        reps = _contract(sym0, _ckpt, max_iter, pairs_distinct, id_col)
+    if nodes is None:
+        return reps
+    return (
+        nodes.select(F.col(id_col)).distinct()
+        .join(reps, id_col, "left")
+        .select(
+            id_col, F.coalesce("cluster_rep", F.col(id_col)).alias("cluster_rep")
+        )
+    )
+
+
+def _label_components(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, component-minimum id) for the graph with edges u[i]–v[i].
+
+    Min-label hooking with pointer jumping over dense ids: each round
+    hooks every edge's larger root under the smaller one
+    (``np.minimum.at``), then jumps ``lab = lab[lab]`` until every node
+    points at a root. Labels only ever decrease and stay inside their
+    component, so the fixpoint labels each node with its component's
+    smallest dense id, which ``np.unique``'s sort makes the smallest id.
+    """
+    ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = inv[: len(u)], inv[len(u):]
+    lab = np.arange(len(ids))
+    while True:
+        ra, rb = lab[a], lab[b]
+        live = ra != rb
+        if not live.any():
+            return ids, ids[lab]
+        np.minimum.at(lab, ra[live], rb[live])
+        np.minimum.at(lab, rb[live], ra[live])
+        while not np.array_equal(nxt := lab[lab], lab):
+            lab = nxt
+
+
+def _contract(
+    sym0: DataFrame, _ckpt, max_iter: int, pairs_distinct: bool, id_col: str
+) -> DataFrame:
+    """Large-star/small-star rounds over the symmetrized edge list →
+    (id_col, cluster_rep) for every node with an edge."""
     if not pairs_distinct:
         sym0 = sym0.distinct()
     edges = _ckpt(sym0, True)
@@ -1703,13 +1818,4 @@ def dedup_clusters(
             f"raise max_iter or inspect the pair producer for nondeterminism."
         )
     reps = edges.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("cluster_rep"))
-    reps = reps.select(F.col("u").alias(id_col), "cluster_rep")
-    if nodes is None:
-        return reps
-    return (
-        nodes.select(F.col(id_col)).distinct()
-        .join(reps, id_col, "left")
-        .select(
-            id_col, F.coalesce("cluster_rep", F.col(id_col)).alias("cluster_rep")
-        )
-    )
+    return reps.select(F.col("u").alias(id_col), "cluster_rep")

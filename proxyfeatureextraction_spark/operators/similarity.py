@@ -497,7 +497,7 @@ def semantic_dedup(
     centroid matrix ever collected/broadcast.  Pairwise similarity is
     confined to cells (``max_cell`` drops degenerate hot cells — same
     guard as the ANN tail; ``chunk_rows`` bounds kernel memory), the
-    duplicate groups collapse through the same large-star/small-star
+    duplicate groups collapse through the same connected-components
     ``dedup_clusters`` machinery as the text routes, and the keep-rule
     is one window over ``(cluster_rep)``.  Members of cells larger
     than ``max_cell`` come back ``capped=True, keep=False`` — they

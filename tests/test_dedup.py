@@ -42,6 +42,31 @@ def adversarial_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+@pytest.fixture
+def both_paths(spark):
+    """``both_paths(check)`` runs ``check()`` at the session's broadcast
+    threshold (driver-sized graphs are labeled on the driver), then with
+    ``autoBroadcastJoinThreshold=-1``, which forces dedup_clusters onto
+    the star contraction; the two results must be equal."""
+
+    def run(check):
+        got = check()
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            contracted = check()
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        assert contracted == got
+        return got
+
+    return run
+
+
+def _labels(df) -> dict:
+    return {r.doc_id: r.cluster_rep for r in df.collect()}
+
+
 def test_hot_bucket_cap_bounds_candidates(adversarial_docs):
     # uncapped: the 300 same-word-set docs collide in every band
     # (300·299/2 pairs); the cap drops those buckets entirely.
@@ -136,6 +161,27 @@ def test_jaccard_expansion_plan_is_equi_join(spark):
         .lower()
     )
     assert "broadcastnestedloopjoin" not in plan and "cartesianproduct" not in plan
+
+
+def test_jaccard_pairs_runs_no_count_job(spark, monkeypatch):
+    """The broadcast gate's doc count comes from the guard aggregate (set
+    multiplicities summed once per set), not from a separate count job;
+    duplicate and empty texts still pair as before."""
+    from pyspark.sql import DataFrame
+
+    df = spark.createDataFrame(
+        [(1, "a b c"), (2, "a b c"), (3, "a b c d"), (4, ""), (5, None), (6, "x y")],
+        "doc_id long, text string",
+    )
+
+    def no_count(self):
+        raise AssertionError("jaccard_pairs ran a count job")
+
+    monkeypatch.setattr(DataFrame, "count", no_count)
+    pairs = jaccard_pairs(df, threshold=0.7)
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    assert {(r.doc_a, r.doc_b) for r in pairs.collect()} == {(1, 2), (1, 3), (2, 3)}
 
 
 def test_null_text_treated_as_empty(spark):
@@ -298,45 +344,122 @@ def test_dedup_incremental_drops_via_any_corpus_neighbor(spark):
     assert out[1] == (1, False) and out[2] == (1, False)
 
 
-def test_dedup_clusters_chain_collapses_to_one_rep(spark):
+def test_dedup_clusters_chain_collapses_to_one_rep(spark, both_paths):
     """Transitive chains A~B, B~C, C~D are ONE cluster (rep = min id);
     independent components keep their own reps; reversed/duplicate input
-    edges are tolerated."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (3, 4), (11, 10), (20, 21)],
-        "doc_a long, doc_b long",
-    )
-    got = {r.doc_id: r.cluster_rep for r in dedup_clusters(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
+    edges are tolerated; the output keeps the (widened) id type."""
+    edges = [(1, 2), (2, 3), (3, 4), (3, 4), (11, 10), (20, 21)]
+    for schema, id_type in (
+        ("doc_a long, doc_b long", "bigint"),
+        ("doc_a int, doc_b int", "int"),
+        ("doc_a int, doc_b long", "bigint"),
+    ):
+        pairs = spark.createDataFrame(edges, schema)
+
+        def check():
+            out = dedup_clusters(pairs)
+            return _labels(out), out.dtypes
+
+        got, dtypes = both_paths(check)
+        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
+        assert dtypes == [("doc_id", id_type), ("cluster_rep", id_type)]
 
 
-def test_dedup_clusters_long_path_converges(spark):
+def test_dedup_clusters_long_path_converges(spark, both_paths):
     """A 64-node path graph needs O(log n) star rounds, not O(diameter):
     must converge well inside max_iter and label every node with node 0."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
     )
-    got = {r.doc_id: r.cluster_rep for r in dedup_clusters(pairs, max_iter=12).collect()}
+    got = both_paths(lambda: _labels(dedup_clusters(pairs, max_iter=12)))
     assert got == {i: 0 for i in range(64)}
 
 
-def test_dedup_clusters_total_assignment_with_nodes(spark):
+def test_dedup_clusters_driver_path_has_no_round_budget(spark):
+    """max_iter bounds only the star rounds: one round cannot contract a
+    64-node path, but the driver path labels it regardless."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
+    )
+    got = _labels(dedup_clusters(pairs, max_iter=1))
+    assert got == {i: 0 for i in range(64)}
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup_clusters(pairs, max_iter=1)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_dedup_clusters_total_assignment_with_nodes(spark, both_paths):
     """With a nodes frame the output is a TOTAL assignment: docs that
     never paired map to themselves; survivors = rep==id rows."""
     pairs = spark.createDataFrame([(5, 6)], "doc_a long, doc_b long")
     nodes = spark.createDataFrame([(5,), (6,), (7,), (8,)], "doc_id long")
-    out = dedup_clusters(pairs, nodes=nodes)
-    got = {r.doc_id: r.cluster_rep for r in out.collect()}
+
+    def check():
+        out = dedup_clusters(pairs, nodes=nodes)
+        survivors = {r.doc_id for r in out.filter("cluster_rep = doc_id").collect()}
+        return _labels(out), survivors
+
+    got, survivors = both_paths(check)
     assert got == {5: 5, 6: 5, 7: 7, 8: 8}
-    survivors = {r.doc_id for r in out.filter("cluster_rep = doc_id").collect()}
     assert survivors == {5, 7, 8}
 
 
-def test_dedup_clusters_matches_union_find_property(spark):
+def _union_find_min(es) -> dict:
+    """Pure-python union-find reference: every node of the (n, 2) edge
+    array → the minimum node of its component."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in es:
+        ra, rb = find(int(a)), find(int(b))
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    expected = {}
+    for node in {int(x) for x in es.ravel()}:
+        expected[node] = find(node)
+    # expected rep must be the component MIN among touched nodes
+    comp_min: dict[int, int] = {}
+    for node, root in expected.items():
+        comp_min[root] = min(comp_min.get(root, node), node)
+    return {n: comp_min[r] for n, r in expected.items()}
+
+
+def test_label_components_matches_union_find():
+    """The driver labeling kernel alone, on graphs larger than a Spark
+    test can afford: sparse and dense random graphs over scattered
+    (negative, non-contiguous) ids, and a long shuffled path."""
+    import numpy as np
+
+    from proxyfeatureextraction_spark.operators.dedup import _label_components
+
+    rng = np.random.default_rng(7)
+    cases = [
+        rng.integers(0, n, size=(m, 2)) * 37 - 500
+        for n, m in ((3000, 1500), (3000, 2900), (500, 5000), (5, 40))
+    ]
+    path = rng.permutation(4000)
+    cases.append(np.stack([path[:-1], path[1:]], axis=1))
+    for es in cases:
+        ids, rep = _label_components(es[:, 0], es[:, 1])
+        assert dict(zip(ids.tolist(), rep.tolist())) == _union_find_min(es)
+
+
+def test_dedup_clusters_matches_union_find_property(spark, both_paths):
     """Property check vs a pure-python union-find on random graphs —
     random edge sets (dense, sparse, self-loops, duplicates) must label
     every node with its component minimum (hypothesis; few examples,
-    each drives the full star-contraction loop)."""
+    each drives the driver labeling and the full star-contraction
+    loop)."""
     import numpy as np
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
@@ -351,31 +474,11 @@ def test_dedup_clusters_matches_union_find_property(spark):
     def go(seed, n_nodes, n_edges):
         rng = np.random.default_rng(seed)
         es = rng.integers(0, n_nodes, size=(n_edges, 2))
-        parent = list(range(n_nodes))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in es:
-            ra, rb = find(int(a)), find(int(b))
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        expected = {}
-        for node in {int(x) for x in es.ravel()}:
-            expected[node] = find(node)
-        # expected rep must be the component MIN among touched nodes
-        comp_min: dict[int, int] = {}
-        for node, root in expected.items():
-            comp_min[root] = min(comp_min.get(root, node), node)
-        expected = {n: comp_min[r] for n, r in expected.items()}
-
+        expected = _union_find_min(es)
         pairs = spark.createDataFrame(
             [(int(a), int(b)) for a, b in es], "doc_a long, doc_b long"
         )
-        got = {r.doc_id: r.cluster_rep for r in dedup_clusters(pairs).collect()}
+        got = both_paths(lambda: _labels(dedup_clusters(pairs)))
         # self-loop-only nodes never enter the edge list → absent unless
         # a nodes frame is passed; restrict to nodes with a real edge
         real = {int(a) for a, b in es if a != b} | {int(b) for a, b in es if a != b}
@@ -384,25 +487,83 @@ def test_dedup_clusters_matches_union_find_property(spark):
     go()
 
 
-def test_dedup_clusters_plan_is_equi_join(spark):
+def test_dedup_clusters_plan_is_equi_join(spark, both_paths):
     """Scale audit: every star round is groupBy + equi-join over the
     edge list — no BroadcastNestedLoopJoin / CartesianProduct anywhere
-    in the final assignment plan (nodes-join included)."""
+    in the final assignment plan (nodes-join included), on either
+    path."""
     pairs = spark.createDataFrame(
         [(i, (i * 7) % 40) for i in range(40)], "doc_a long, doc_b long"
     )
     nodes = spark.createDataFrame([(i,) for i in range(50)], "doc_id long")
-    out = dedup_clusters(pairs, nodes=nodes)
-    plan = out._jdf.queryExecution().executedPlan().toString().lower()
-    assert "broadcastnestedloopjoin" not in plan and "cartesianproduct" not in plan
-    assert out.count() == 50
+
+    def check():
+        out = dedup_clusters(pairs, nodes=nodes)
+        plan = out._jdf.queryExecution().executedPlan().toString().lower()
+        assert "broadcastnestedloopjoin" not in plan and "cartesianproduct" not in plan
+        assert out.count() == 50
+        return _labels(out)
+
+    both_paths(check)
 
 
-def test_dedup_clusters_empty_pairs(spark):
+def test_dedup_clusters_empty_pairs(spark, both_paths):
     pairs = spark.createDataFrame([], "doc_a long, doc_b long")
     nodes = spark.createDataFrame([(1,), (2,)], "doc_id long")
-    got = {r.doc_id: r.cluster_rep for r in dedup_clusters(pairs, nodes=nodes).collect()}
+    got = both_paths(lambda: _labels(dedup_clusters(pairs, nodes=nodes)))
     assert got == {1: 1, 2: 2}
+    assert both_paths(lambda: _labels(dedup_clusters(pairs))) == {}
+
+
+def _jobs_in(spark, fn):
+    """(result, number of Spark jobs fn() fired)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    out = fn()
+    return out, len(set(tracker.getJobIdsForGroup()) - before)
+
+
+def test_dedup_clusters_gate_boundary(spark):
+    """The driver path takes a graph of k edges iff k <= threshold // 16:
+    at exactly 16·k it labels on the driver (≤ 2 jobs), one byte lower
+    it contracts (a job per star-round stage and checksum); both give
+    the same labels."""
+    edges = [(1, 2), (2, 3), (3, 4), (4, 1), (11, 10), (20, 21), (21, 22)]
+    # a self-loop is filtered before the gate counts edges
+    pairs = spark.createDataFrame(edges + [(5, 5)], "doc_a long, doc_b long")
+    k = len(edges)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    got = {}
+    try:
+        for thr in (16 * k, 16 * k - 1):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(thr))
+            out, jobs = _jobs_in(spark, lambda: dedup_clusters(pairs))
+            got[thr] = (_labels(out), jobs)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    (at, at_jobs), (below, below_jobs) = got[16 * k], got[16 * k - 1]
+    assert at == below == {
+        1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20
+    }
+    assert at_jobs <= 2 < below_jobs, (at_jobs, below_jobs)
+
+
+def test_dedup_clusters_driver_path_job_count(spark):
+    """A driver-sized graph costs one bounded collect inside
+    dedup_clusters (it also materializes the edge checkpoint) — no star
+    rounds, no checksum jobs."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(200)] + [(i, i + 3) for i in range(300, 500)],
+        "doc_a long, doc_b long",
+    )
+    nodes = spark.createDataFrame([(i,) for i in range(600)], "doc_id long")
+    out, jobs = _jobs_in(spark, lambda: dedup_clusters(pairs, nodes=nodes))
+    assert jobs <= 2, jobs
+    got = _labels(out)
+    assert len(got) == 600
+    assert all(got[i] == 0 for i in range(201))
+    assert all(got[i] == 300 + (i - 300) % 3 for i in range(300, 503))
+    assert all(got[i] == i for i in range(503, 600))
 
 
 def test_dedup_clusters_end_to_end_near_dup_removal(spark):
@@ -736,10 +897,11 @@ def test_band_signature_store_param_mismatch_rejected(spark):
         ).collect()
 
 
-def test_dedup_clusters_reliable_checkpoint_mode(spark, tmp_path):
+def test_dedup_clusters_reliable_checkpoint_mode(spark, tmp_path, both_paths):
     """reliable=True swaps localCheckpoint for reliable checkpoint (same
-    answers on the chain topology, checkpoint files actually written);
-    without a checkpoint dir it fails fast with a clear message."""
+    answers on the chain topology, checkpoint files actually written on
+    both paths); without a checkpoint dir it fails fast with a clear
+    message."""
     import os
 
     pairs = spark.createDataFrame(
@@ -750,15 +912,20 @@ def test_dedup_clusters_reliable_checkpoint_mode(spark, tmp_path):
     if old is None:
         with pytest.raises(ValueError, match="setCheckpointDir"):
             dedup_clusters(pairs, reliable=True)
-    ckdir = str(tmp_path / "ck")
-    sc.setCheckpointDir(ckdir)
+    runs = iter(("driver", "contraction"))
+
+    def check():
+        # a fresh directory per path, so each must write its own files
+        ckdir = str(tmp_path / next(runs))
+        sc.setCheckpointDir(ckdir)
+        got = _labels(dedup_clusters(pairs, reliable=True))
+        written = [f for _, _, fs in os.walk(ckdir) for f in fs]
+        assert written, "no reliable checkpoint files written"
+        return got
+
     try:
-        got = {
-            r.doc_id: r.cluster_rep
-            for r in dedup_clusters(pairs, reliable=True).collect()
-        }
+        got = both_paths(check)
         assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
-        assert any(os.scandir(ckdir)), "no reliable checkpoint files written"
     finally:
         if old is not None:
             sc.setCheckpointDir(old)
@@ -821,6 +988,41 @@ def test_dedup_incremental_rejects_reused_id_across_batches(spark):
     )
     out2 = dedup_incremental(relanded, corpus, threshold=0.8).toPandas()
     assert not out2["is_survivor"].any()
+
+
+def test_dedup_incremental_relanded_file_edges_distinct(spark, monkeypatch):
+    """A re-landed file (same id, same content in batch and corpus) is
+    two union rows: neither the rep side (7) nor the doc side (5) of the
+    exact-edge join may emit its edge twice, or pairs_distinct=True
+    would be a false promise to dedup_clusters."""
+    from proxyfeatureextraction_spark.operators import dedup
+
+    seen = []
+
+    def spy(pairs, *args, **kwargs):
+        seen.append((pairs.collect(), kwargs.get("pairs_distinct")))
+        return dedup_clusters(pairs, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "dedup_clusters", spy)
+    x = "the quick brown fox jumps over the lazy dog today"
+    y = "an entirely different document about gardens and the rain"
+    corpus = spark.createDataFrame([(7, x), (5, y)], "doc_id long, text string")
+    new = spark.createDataFrame(
+        [(7, x), (9, x), (5, y), (3, y)], "doc_id long, text string"
+    )
+    for method in ("exact", "scalable"):
+        seen.clear()
+        out = {
+            r.doc_id: (r.cluster_rep, r.is_survivor)
+            for r in dedup_incremental(new, corpus, method=method).collect()
+        }
+        ((edges, distinct),) = seen
+        assert distinct
+        assert len(edges) == len(set(edges)), (method, edges)
+        assert {tuple(e) for e in edges} == {(7, 9), (3, 5)}, method
+        assert out == {
+            7: (7, False), 9: (7, False), 5: (3, False), 3: (3, False)
+        }, method
 
 
 def test_sig_store_rejects_mixed_parameters(spark, tmp_path):
